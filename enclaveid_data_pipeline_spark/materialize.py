@@ -107,9 +107,11 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
 
 
 def release_blocks(df: DataFrame) -> None:
-    """Unpersist the executor blocks behind a ``local``-materialized
-    frame (no-op for ``table``/``reliable``/``none`` frames, or any
-    plan that is not a bare ``LogicalRDD``).
+    """Unpersist the executor blocks behind a frame whose analyzed
+    plan is a bare ``LogicalRDD``: a ``local``-materialized frame,
+    and also a ``reliable`` one, since ``df.checkpoint()`` yields a
+    ``LogicalRDD`` too. No-op for ``table``/``none`` frames and any
+    other plan.
 
     Same per-frame attribution as :class:`RollingBoundary`: the
     analyzed plan of a ``localCheckpoint()`` result is the

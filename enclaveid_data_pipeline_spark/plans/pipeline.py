@@ -49,6 +49,25 @@ class Pipeline:
         return frames
 
 
+def _chunk_by_day(events: DataFrame, chunk_size: int) -> DataFrame:
+    """G1/G2: the day-chunk stage both branches share — each user's
+    events per calendar day, in (ts, event_id) order, cut into chunks
+    of ``chunk_size`` (reference chunk_size=15,
+    assets/recent_history.py:48)."""
+    ev = events.select(
+        "user_id",
+        "event_id",
+        F.col("event_type").alias("title"),
+        F.date_format("ts", "yyyy-MM-dd").alias("date_s"),
+        F.date_format("ts", "HH:mm").alias("hour_s"),
+        "ts",
+    )
+    w = Window.partitionBy("user_id", "date_s").orderBy("ts", "event_id")
+    return ev.withColumn(
+        "chunk_id", F.floor((F.row_number().over(w) - 1) / chunk_size)
+    )
+
+
 @dataclass(frozen=True)
 class RecentBranchConfig:
     """X5: tunables of the recent branch (reference defaults:
@@ -91,19 +110,7 @@ def build_recent_branch_pipeline(
 
     @p.add("chunk")
     def _chunk(frames: Frames) -> Frames:
-        ev = frames["recent_events"].select(
-            "user_id",
-            "event_id",
-            F.col("event_type").alias("title"),
-            F.date_format("ts", "yyyy-MM-dd").alias("date_s"),
-            F.date_format("ts", "HH:mm").alias("hour_s"),
-            "ts",
-        )
-        w = Window.partitionBy("user_id", "date_s").orderBy("ts", "event_id")
-        chunked = ev.withColumn(
-            "chunk_id",
-            F.floor((F.row_number().over(w) - 1) / config.chunk_size),
-        )
+        chunked = _chunk_by_day(frames["recent_events"], config.chunk_size)
         return {"chunked": chunked}
 
     @p.add("summarize")
@@ -189,20 +196,7 @@ def build_old_branch_pipeline(
 
     @p.add(f"{spec.name}:chunk")
     def _chunk(frames: Frames) -> Frames:
-        ev = frames["events"].select(
-            "user_id",
-            "event_id",
-            F.col("event_type").alias("title"),
-            F.date_format("ts", "yyyy-MM-dd").alias("date_s"),
-            F.date_format("ts", "HH:mm").alias("hour_s"),
-            "ts",
-        )
-        w = Window.partitionBy("user_id", "date_s").orderBy("ts", "event_id")
-        return {
-            "old_chunked": ev.withColumn(
-                "chunk_id", F.floor((F.row_number().over(w) - 1) / chunk_size)
-            )
-        }
+        return {"old_chunked": _chunk_by_day(frames["events"], chunk_size)}
 
     @p.add(f"{spec.name}:extract_interests")
     def _extract(frames: Frames) -> Frames:

@@ -44,7 +44,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .layout import read_snapshot, write_snapshot
+from .commitstore import resolve_backend
+from .layout import (
+    VacuumedHistoryError,
+    fold_stream_cursors,
+    read_snapshot,
+    read_snapshot_pruned,
+    write_snapshot,
+)
 
 _CATALOG_JSON = "catalog.json"
 _MAIN = "main"
@@ -72,11 +79,9 @@ class SnapshotCatalog:
     a ``_catalog`` version history of table→version mappings."""
 
     def __init__(self, root: str, backend=None) -> None:
-        from .commitstore import DEFAULT_BACKEND
-
         self.root = root
         self.cat_dir = os.path.join(root, "_catalog")
-        self.be = backend if backend is not None else DEFAULT_BACKEND
+        self.be = resolve_backend(backend)
 
     # ---- paths / resolution -------------------------------------
 
@@ -84,7 +89,7 @@ class SnapshotCatalog:
         return os.path.join(self.root, "tables", name)
 
     def current_version(self) -> int | None:
-        # main is a ref like any branch; _CURRENT is kept as a
+        # main is a ref like any branch; the backend's pointer is kept as a
         # monotonic mirror (main heads strictly increase numerically
         # — commits claim above the global max, and a fast-forward
         # target was claimed after the branch point) for readers of
@@ -146,8 +151,16 @@ class SnapshotCatalog:
         snapshots) the payload resolves and the TABLE data does not.
         ``merge_branch`` stays correct in that state; only the
         time-travel data read degrades, loudly and typed."""
-        from .layout import VacuumedHistoryError
+        return read_snapshot(
+            spark,
+            self.table_path(table),
+            version=self._table_version(table, catalog_version),
+            backend=self.be,
+        )
 
+    def _table_version(self, table: str, catalog_version: int | None) -> int:
+        """The table version catalog version ``catalog_version``
+        (default: current) maps ``table`` to."""
         try:
             m = self.mapping(catalog_version)
         # FileNotFoundError ONLY (round-8 advice): a vacuumed payload
@@ -166,9 +179,7 @@ class SnapshotCatalog:
                 f"{catalog_version if catalog_version is not None else self.current_version()}; "
                 f"tables: {sorted(m)}"
             )
-        return read_snapshot(
-            spark, self.table_path(table), version=m[table], backend=self.be
-        )
+        return m[table]
 
     def read_pruned(
         self,
@@ -186,31 +197,11 @@ class SnapshotCatalog:
         (pass one ``catalog_version`` to every read for a
         multi-table-consistent view). Predicate triples as in
         layout.pruned_files."""
-        from .layout import VacuumedHistoryError, read_snapshot_pruned
-
-        try:
-            m = self.mapping(catalog_version)
-        # FileNotFoundError ONLY (round-8 advice): a vacuumed payload
-        # is a missing file; mapping EACCES / transient I/O errors to
-        # VacuumedHistoryError would misreport genuine FS failures as
-        # vacuumed history. VacuumedHistoryError itself subclasses
-        # FileNotFoundError, so a typed raise from below passes through.
-        except FileNotFoundError as e:
-            raise VacuumedHistoryError(
-                f"catalog version {catalog_version} was vacuumed; "
-                f"retained: {self.versions()}"
-            ) from e
-        if table not in m:
-            raise KeyError(
-                f"table {table!r} not in catalog version "
-                f"{catalog_version if catalog_version is not None else self.current_version()}; "
-                f"tables: {sorted(m)}"
-            )
         return read_snapshot_pruned(
             spark,
             self.table_path(table),
             predicates,
-            version=m[table],
+            version=self._table_version(table, catalog_version),
             backend=self.be,
         )
 
@@ -444,21 +435,9 @@ class SnapshotCatalog:
             parent_meta = self._payload(parent)["meta"]
         except OSError:
             parent_meta = {}  # vacuumed parent: start the map fresh
-        parent_streams = dict(parent_meta.get("streams", {}))
-        if not parent_streams and "batch_id" in parent_meta:
-            # Pre-fold single-stream history: attribute the bare
-            # batch_id to the legacy sink id so the cursor enters the
-            # map and survives later non-stream commits (round-7
-            # advice: without this, DML after a pre-upgrade stream
-            # commit left the chain's head map without the cursor).
-            parent_streams[LEGACY_STREAM_ID] = parent_meta["batch_id"]
-        own_streams = meta.get("streams", {})
-        # Per-stream max: neither the parent fold nor the writer's own
-        # entries may regress a cursor the other side carries.
-        merged_streams = {
-            k: max(int(parent_streams.get(k, -1)), int(own_streams.get(k, -1)))
-            for k in {*parent_streams, *own_streams}
-        }
+        merged_streams = fold_stream_cursors(
+            parent_meta, meta.get("streams", {}), LEGACY_STREAM_ID
+        )
         if merged_streams:
             meta["streams"] = merged_streams
         try:
@@ -601,8 +580,8 @@ class SnapshotCatalog:
         CAS is the linearization point (a rival that moved the ref
         makes ours fail → rebase retry; one that claimed a number but
         hasn't moved the ref yet will fail ITS CAS and rebase onto
-        us — no mapping is ever silently dropped), and _CURRENT
-        mirrors the ref monotonically for raw-layout readers."""
+        us — no mapping is ever silently dropped), and the backend's
+        pointer mirrors the ref monotonically for raw-layout readers."""
         out = self._publish_to_ref(
             _MAIN, base_v, base_map, updates, max_retries, meta
         )
@@ -700,7 +679,7 @@ class SnapshotCatalog:
                 dropped.setdefault(t, []).append(tv)
             # keep each table's own pointer consistent with the
             # newest retained reference (readers SHOULD go through
-            # the catalog, but a stale _CURRENT pointing at a dropped
+            # the catalog, but a stale pointer naming a dropped
             # version would break direct reads)
             if keep:
                 self.be.advance_pointer(tp, max(keep))

@@ -271,7 +271,7 @@ class FileCommitBackend(CommitBackend):
     def claim_version(self, path: str, cand: int, staging: str) -> bool:
         try:
             # rename onto an existing non-empty dir fails atomically;
-            # snap dirs are never empty (part files + _SUCCESS), so a
+            # snap dirs are never empty (part files + commit meta), so a
             # loser can never silently merge into the winner's dir
             os.rename(staging, os.path.join(path, _SNAP_FMT.format(cand)))
             return True
@@ -392,3 +392,9 @@ class ConditionalPutCommitBackend(CommitBackend):
 
 
 DEFAULT_BACKEND = FileCommitBackend()
+
+
+def resolve_backend(backend: CommitBackend | None) -> CommitBackend:
+    """The backend a snapshot call commits and resolves through:
+    ``backend`` when given, else :data:`DEFAULT_BACKEND`."""
+    return DEFAULT_BACKEND if backend is None else backend

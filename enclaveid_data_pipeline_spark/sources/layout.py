@@ -14,16 +14,33 @@ At 100 TB this is the default layout for any fact table with a
 dominant join key; choose bucket counts as a multiple of cluster
 parallelism and keep them EQUAL across co-joined tables (unequal
 counts fall back to a shuffle on one side).
+
+Most of this module is the versioned snapshot table (from
+"snapshot versioning" down to :func:`vacuum_snapshots`): immutable
+snapshot versions with time travel, write-time zone maps and Bloom
+indexes for pruned reads, copy-on-write and merge-on-read DML, the
+change feed, restore and vacuum. Every writer stages its files in one
+private staging directory and commits it through
+:class:`~.commitstore.CommitBackend`, which alone knows how versions
+and the committed-version pointer are laid out (directories and a
+pointer file on POSIX, manifest objects on an object store); readers
+resolve versions through the same backend.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import math
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .commitstore import DEFAULT_BACKEND, CommitBackend, resolve_backend
 
 
 def save_bucketed(
@@ -182,8 +199,6 @@ def compact_to_file_size(
     Per-partition compaction at 100 TB: run this per partition
     directory, newest partitions only (old ones are already compact).
     """
-    import shutil
-
     total = sum(
         os.path.getsize(os.path.join(path, f))
         for f in os.listdir(path)
@@ -218,8 +233,6 @@ def drop_table(spark: SparkSession, table: str) -> None:
     qualified ``db.table`` lives under ``<db>.db/<table>`` — naive
     ``warehouse/<table>`` misses both and leaves the orphan behind.
     """
-    import shutil
-
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     parts = table.lower().split(".")
@@ -232,8 +245,8 @@ def drop_table(spark: SparkSession, table: str) -> None:
 
 # ---- snapshot versioning (time travel) ---------------------------------
 
-_SNAP_FMT = "snap-{:05d}"
-_CURRENT = "_CURRENT"
+_COMMIT_META = "_commit_meta.json"
+_STAGING = ".staging-"
 
 
 class VacuumedHistoryError(FileNotFoundError):
@@ -250,27 +263,108 @@ class VacuumedHistoryError(FileNotFoundError):
 def snapshot_versions(path: str) -> list[int]:
     """All snapshot versions present on disk (committed or not),
     ascending."""
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("snap-"):
-            try:
-                out.append(int(n.split("-", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return DEFAULT_BACKEND.versions(path)
 
 
 def current_snapshot(path: str) -> int | None:
     """The committed version the pointer names, or None."""
+    return DEFAULT_BACKEND.current_version(path)
+
+
+def _head(path: str, be: CommitBackend) -> int:
+    """The committed version; FileNotFoundError when there is none."""
+    v = be.current_version(path)
+    if v is None:
+        raise FileNotFoundError(f"no committed snapshot at {path}")
+    return v
+
+
+def _snapshot_dir(
+    path: str, version: int | None, be: CommitBackend
+) -> tuple[int, str]:
+    """Resolve ``version`` (default: the committed head) to ``(version,
+    data dir)``. A version whose data is gone — its manifest deleted
+    (``drop_version`` deletes the manifest first, so this is never a
+    half-deleted read) or its directory reclaimed — raises
+    :class:`VacuumedHistoryError` naming the retained versions."""
+    v = _head(path, be) if version is None else version
     try:
-        with open(os.path.join(path, _CURRENT)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
+        d = be.data_dir(path, v)
+    except FileNotFoundError:
+        d = None
+    if d is None or ("://" not in d and not os.path.isdir(d)):
+        raise VacuumedHistoryError(
+            f"snapshot {v} not present at {path} (vacuumed or never "
+            f"committed); available: {be.versions(path)}"
+        )
+    return v, d
+
+
+def _data_files(d: str) -> list[str]:
+    """Sorted basenames of the parquet data files in ``d`` — the names
+    Spark reads (``_``/``.``-prefixed files are metadata)."""
+    return sorted(
+        n
+        for n in os.listdir(d)
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
+
+
+@contextlib.contextmanager
+def _staging(path: str):
+    """A fresh private ``.staging-<uuid>`` dir under ``path`` for one
+    commit's files, removed when the body raises. Commit it with
+    :func:`_commit_staging` after the body. Until claimed it is
+    invisible to readers and version allocation."""
+    os.makedirs(path, exist_ok=True)
+    staging = os.path.join(path, f"{_STAGING}{uuid.uuid4().hex}")
+    os.makedirs(staging)
+    try:
+        yield staging
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
+def _append_files(df: DataFrame, staging: str) -> list[str]:
+    """Write ``df`` as new parquet files beside whatever ``staging``
+    already holds; returns the new files' paths. Spark writes into a
+    private subdirectory and only the data files move up, so the
+    writer's ``_SUCCESS`` and checksum files never reach a version."""
+    tmp = os.path.join(staging, ".append")
+    df.write.mode("error").parquet(tmp)
+    new = []
+    for n in _data_files(tmp):
+        os.rename(os.path.join(tmp, n), os.path.join(staging, n))
+        new.append(os.path.join(staging, n))
+    shutil.rmtree(tmp)
+    return new
+
+
+def _write_commit_meta(staging: str, meta: dict) -> None:
+    with open(os.path.join(staging, _COMMIT_META), "w") as f:
+        json.dump(meta, f)
+
+
+def _finish_staging(
+    spark: SparkSession,
+    staging: str,
+    stats_cols: "Sequence[str] | None",
+    bloom_cols: "Sequence[str] | None",
+    commit_meta: dict | None,
+) -> None:
+    """Write the stats manifest and commit meta of a freshly staged
+    frame. Both are part of the snapshot, so they land before the
+    claim: the publish carries data, stats and meta atomically."""
+    if stats_cols or bloom_cols:
+        _write_file_stats(
+            spark,
+            staging,
+            list(stats_cols or []),
+            bloom_cols=list(bloom_cols or []),
+        )
+    if commit_meta is not None:
+        _write_commit_meta(staging, commit_meta)
 
 
 def write_snapshot(
@@ -287,9 +381,9 @@ def write_snapshot(
 
     - **readers never see a partial table**: data files land in a
       private ``.staging-<uuid>`` directory first; publication is a
-      single atomic directory rename, and the commit is a single
-      atomic pointer replace (``_CURRENT``), so a crash at any point
-      leaves orphans and the previous version intact;
+      single atomic version claim and the commit a single atomic
+      pointer advance, so a crash at any point leaves orphans and the
+      previous version intact;
     - **history stays queryable**: old snapshots are untouched until
       :func:`vacuum_snapshots`, so a bad backfill is a pointer flip
       away from undone, and any past version remains readable for
@@ -299,10 +393,10 @@ def write_snapshot(
       swap, not a read-then-write, delegated to a pluggable
       :class:`~.commitstore.CommitBackend` (round 6). The default
       :class:`~.commitstore.FileCommitBackend` claims a version by
-      ``os.rename(staging, snap-N)`` — POSIX rename onto an existing
+      an atomic directory rename — POSIX rename onto an existing
       non-empty directory fails, so exactly one writer wins each N
       and the loser recomputes and retries with the next number —
-      and advances ``_CURRENT`` under an ``fcntl.flock`` so the
+      and advances the pointer under an ``fcntl.flock`` so the
       read-check-replace is serialized and the pointer can NEVER
       regress below a newer commit (the round-5 advice showed the
       unlocked own-version re-check could). On an object store pass
@@ -311,38 +405,20 @@ def write_snapshot(
       etag-CAS loop, and data files are never renamed (the manifest
       points at the immutable staging dir).
 
-    Crashed-writer debris is inert: an unrenamed ``.staging-*`` dir
+    Crashed-writer debris is inert: an unclaimed ``.staging-*`` dir
     is invisible to readers and version allocation; a claimed-but-
     unpointed version is skipped forward over (next version =
     max(claimed, committed) + 1) and reaped by vacuum. Returns the
     committed version number.
     """
-    import uuid
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    os.makedirs(path, exist_ok=True)
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("error").parquet(staging)
-    if stats_cols or bloom_cols:
-        # part of the snapshot, so it must land before the claim:
-        # the publish rename carries data AND stats atomically
-        _write_file_stats(
-            df.sparkSession,
-            staging,
-            list(stats_cols or []),
-            bloom_cols=list(bloom_cols or []),
+    be = resolve_backend(backend)
+    with _staging(path) as staging:
+        _append_files(df, staging)
+        _finish_staging(
+            df.sparkSession, staging, stats_cols, bloom_cols, commit_meta
         )
-    if commit_meta is not None:
-        import json
-
-        with open(os.path.join(staging, _COMMIT_META), "w") as f:
-            json.dump(commit_meta, f)
     return _commit_staging(path, staging, be, max_retries)
 
-
-_COMMIT_META = "_commit_meta.json"
 
 # ---- merge-on-read deletion vectors (round 8) --------------------------
 #
@@ -389,8 +465,6 @@ def _unpack_positions(b64: str) -> list[int]:
 def _load_dvs(snap_dir: str) -> dict:
     """``{file_basename: [row_index, ...]}`` or {} when the snapshot
     carries no deletion vectors."""
-    import json
-
     p = os.path.join(snap_dir, _DELETION_VECTORS)
     if not os.path.exists(p):
         return {}
@@ -399,10 +473,23 @@ def _load_dvs(snap_dir: str) -> dict:
 
 
 def _write_dvs(snap_dir: str, dvs: dict) -> None:
-    import json
-
     with open(os.path.join(snap_dir, _DELETION_VECTORS), "w") as f:
         json.dump({k: _pack_positions(v) for k, v in dvs.items()}, f)
+
+
+#: Row-position columns: the data file's basename and the row's index
+#: in it — a deletion vector's row identity.
+_POS_COLS = ("__dv_file", "__dv_ri")
+_POS_SCHEMA = "__dv_file string, __dv_ri long"
+
+
+def _with_positions(df: DataFrame) -> DataFrame:
+    """``df`` plus the :data:`_POS_COLS`. The metadata columns resolve
+    only on a raw parquet scan, so add them before any filter."""
+    return df.withColumn(
+        _POS_COLS[0],
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+    ).withColumn(_POS_COLS[1], F.col("_metadata.row_index"))
 
 
 def _read_files_with_dvs(
@@ -414,26 +501,18 @@ def _read_files_with_dvs(
     The positions side is broadcast: bounded by deleted rows, the
     selective-delete regime DVs exist for."""
     df = spark.read.parquet(*files)
-    relevant = {
-        os.path.basename(f): dvs[os.path.basename(f)]
-        for f in files
-        if os.path.basename(f) in dvs
-    }
-    if not relevant:
-        return df
     pairs = [
-        (base, int(ri)) for base, pos in relevant.items() for ri in pos
+        (base, int(ri))
+        for base in map(os.path.basename, files)
+        for ri in dvs.get(base, ())
     ]
-    pos_df = spark.createDataFrame(pairs, "__dv_file string, __dv_ri long")
-    keyed = df.withColumn(
-        "__dv_file",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-    ).withColumn("__dv_ri", F.col("_metadata.row_index"))
+    if not pairs:
+        return df
+    pos_df = spark.createDataFrame(pairs, _POS_SCHEMA)
     return (
-        keyed.join(
-            F.broadcast(pos_df), on=["__dv_file", "__dv_ri"], how="left_anti"
-        )
-        .drop("__dv_file", "__dv_ri")
+        _with_positions(df)
+        .join(F.broadcast(pos_df), on=list(_POS_COLS), how="left_anti")
+        .drop(*_POS_COLS)
     )
 
 
@@ -444,11 +523,7 @@ def read_commit_meta(
 ) -> dict | None:
     """The ``commit_meta`` dict a writer attached to a version (e.g.
     a streaming sink's batch id), or None when absent."""
-    import json
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
+    be = resolve_backend(backend)
     v = be.current_version(path) if version is None else version
     if v is None:
         return None
@@ -521,17 +596,35 @@ def stream_batch_id(
     return -1
 
 
+def fold_stream_cursors(head_meta: dict, own: dict, legacy_id: str) -> dict:
+    """The per-stream replay cursors a commit on top of a head with
+    meta ``head_meta`` carries, given the writer's ``own`` cursors:
+    the per-stream max, so neither side can regress the other's
+    cursor. A head with no ``streams`` map but a bare ``batch_id``
+    (pre-fold single-stream history) has it attributed to
+    ``legacy_id``, so the cursor enters the map and survives later
+    non-stream commits (round-7 advice: without this, a DML commit
+    after a pre-upgrade stream commit left the head with neither map
+    nor batch_id → refold on redelivery)."""
+    head = dict(head_meta.get("streams", {}))
+    if not head and "batch_id" in head_meta:
+        head[legacy_id] = head_meta["batch_id"]
+    return {
+        k: max(int(head.get(k, -1)), int(own.get(k, -1)))
+        for k in {*head, *own}
+    }
+
+
 def _commit_staging(
-    path: str, staging: str, be: "CommitBackend", max_retries: int
+    path: str, staging: str, be: CommitBackend, max_retries: int
 ) -> int:
     """Version-claim loop + pointer advance for a fully-prepared
     staging dir (data files and any ``_file_stats.json`` already in
-    place). Shared by :func:`write_snapshot` and the copy-on-write
-    DML below. Every commit is stamped with ``committed_at`` (UTC
-    ISO) in its meta so :func:`read_snapshot_as_of` can time-travel
-    by timestamp, not just version number."""
+    place) — the one commit path of every snapshot writer. Every
+    commit is stamped with ``committed_at`` (UTC ISO) in its meta so
+    :func:`read_snapshot_as_of` can time-travel by timestamp, not
+    just version number."""
     import datetime
-    import json
 
     meta_path = os.path.join(staging, _COMMIT_META)
     try:
@@ -543,8 +636,7 @@ def _commit_staging(
         "committed_at",
         datetime.datetime.now(datetime.timezone.utc).isoformat(),
     )
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
+    _write_commit_meta(staging, meta)
 
     # The writer's OWN stream entries, captured once before the retry
     # loop: each retry recomputes the fold from the CURRENT head plus
@@ -561,36 +653,20 @@ def _commit_staging(
         # Fold the per-stream replay cursor forward from the version
         # we're committing above (see stream_batch_id): re-evaluated
         # inside the retry loop so a rebase after a lost claim folds
-        # from the CURRENT pointer, not a stale one. Per-stream max so
-        # neither side can regress the other's cursor.
+        # from the CURRENT pointer, not a stale one.
         if cur is not None:
             head_meta = read_commit_meta(path, version=cur, backend=be) or {}
-            head_streams = dict(head_meta.get("streams", {}))
-            if not head_streams and "batch_id" in head_meta:
-                # Pre-fold single-stream history: attribute the bare
-                # batch_id to the legacy sink id so the cursor enters
-                # the map and survives later non-stream commits
-                # (round-7 advice: without this, a DML commit after a
-                # pre-upgrade stream commit left the head with neither
-                # map nor batch_id → refold on redelivery).
-                head_streams[LEGACY_STREAM_ID] = head_meta["batch_id"]
-            merged = {
-                k: max(
-                    int(head_streams.get(k, -1)), int(orig_streams.get(k, -1))
-                )
-                for k in {*head_streams, *orig_streams}
-            }
+            merged = fold_stream_cursors(
+                head_meta, orig_streams, LEGACY_STREAM_ID
+            )
             if merged and merged != meta.get("streams"):
                 meta["streams"] = merged
-                with open(meta_path, "w") as f:
-                    json.dump(meta, f)
+                _write_commit_meta(staging, meta)
         cand = max(versions + ([cur] if cur is not None else []) + [0]) + 1
         if be.claim_version(path, cand, staging):
             nxt = cand
             break
     if nxt is None:
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
             f"write_snapshot: lost the version race {max_retries} times "
@@ -609,36 +685,8 @@ def read_snapshot(
 ) -> DataFrame:
     """Read the committed snapshot (default) or time-travel to
     ``version``. Pass the same ``backend`` the writer used."""
-    if backend is not None:
-        v = backend.current_version(path) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        try:
-            d = backend.data_dir(path, v)
-        except FileNotFoundError as e:
-            # manifest gone = vacuum reclaimed the version (drop_
-            # version deletes the manifest first, so this is never a
-            # half-deleted read) — typed, with the retained versions
-            raise VacuumedHistoryError(
-                f"snapshot {v} at {path} was vacuumed; retained: "
-                f"{backend.versions(path)}"
-            ) from e
-        if "://" not in d and not os.path.isdir(d):
-            raise VacuumedHistoryError(
-                f"snapshot {v} not present at {path} (vacuumed or "
-                f"never committed); retained: {backend.versions(path)}"
-            )
-        return _read_snapshot_dir(spark, d)
-    v = current_snapshot(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    snap_dir = os.path.join(path, _SNAP_FMT.format(v))
-    if not os.path.isdir(snap_dir):
-        raise VacuumedHistoryError(
-            f"snapshot {v} not present at {path} (vacuumed or never "
-            f"committed); available: {snapshot_versions(path)}"
-        )
-    return _read_snapshot_dir(spark, snap_dir)
+    _v, d = _snapshot_dir(path, version, resolve_backend(backend))
+    return _read_snapshot_dir(spark, d)
 
 
 def _read_snapshot_dir(spark: SparkSession, snap_dir: str) -> DataFrame:
@@ -649,11 +697,7 @@ def _read_snapshot_dir(spark: SparkSession, snap_dir: str) -> DataFrame:
     dvs = _load_dvs(snap_dir) if "://" not in snap_dir else {}
     if not dvs:
         return spark.read.parquet(snap_dir)
-    files = sorted(
-        os.path.join(snap_dir, n)
-        for n in os.listdir(snap_dir)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    )
+    files = [os.path.join(snap_dir, n) for n in _data_files(snap_dir)]
     return _read_files_with_dvs(spark, files, dvs)
 
 
@@ -684,35 +728,22 @@ def row_count_hint(
     and the oracle parity at gate SFs depends on hitting the same
     width the SQL oracle assumes."""
     import glob as _glob
-    import json
 
     if "://" in path:
         return None
     # 1) managed snapshot manifest
     try:
-        from .commitstore import DEFAULT_BACKEND
-
-        be = backend if backend is not None else DEFAULT_BACKEND
+        be = resolve_backend(backend)
         v = be.current_version(path) if version is None else version
-        dv_deleted = 0
         if v is not None:
             d = be.data_dir(path, v)
-            # merge-on-read deletion vectors hide rows the files
-            # still physically hold — the hint must subtract them
-            dv_deleted = sum(
-                len(ps) for ps in _load_dvs(d).values()
-            ) if "://" not in d else 0
-            stats = os.path.join(d, _FILE_STATS)
-            if os.path.exists(stats):
-                with open(stats) as f:
-                    manifest = json.load(f)
-                return (
-                    sum(
-                        int(e["n_rows"])
-                        for e in manifest["files"].values()
-                    )
-                    - dv_deleted
-                )
+            manifest = _load_manifest(d)
+            if manifest is not None:
+                # merge-on-read deletion vectors hide rows the files
+                # still physically hold — the hint must subtract them
+                return sum(
+                    int(e["n_rows"]) for e in manifest["files"].values()
+                ) - sum(len(ps) for ps in _load_dvs(d).values())
             path = d  # fall through to footers over the snapshot dir
     except (OSError, ValueError, KeyError, TypeError):
         pass
@@ -721,11 +752,9 @@ def row_count_hint(
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
-            files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-            if not files:
-                files = sorted(
-                    _glob.glob(os.path.join(path, "part-*"))
-                )
+            files = [
+                os.path.join(path, n) for n in _data_files(path)
+            ] or sorted(_glob.glob(os.path.join(path, "part-*")))
         elif os.path.isfile(path):
             files = [path]
         else:
@@ -862,6 +891,42 @@ def _bloom_contains(b64_bitmap: str, positions: list[int]) -> bool:
     return True
 
 
+def _load_manifest(d: str) -> dict | None:
+    """The version's ``_file_stats.json`` manifest, or None."""
+    p = os.path.join(d, _FILE_STATS)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def _write_manifest(
+    d: str, cols: list[str], files: dict, bloom: dict | None
+) -> None:
+    manifest = {"cols": cols, "files": files}
+    if bloom:
+        manifest["bloom"] = bloom
+    with open(os.path.join(d, _FILE_STATS), "w") as f:
+        json.dump(manifest, f)
+
+
+def _file_entries(
+    spark: SparkSession, files: list[str], cols: list[str], bloom: dict | None
+) -> dict:
+    """Manifest entries for ``files``: zone maps for ``cols`` plus,
+    under a bloom config (``{"cols", "bits_log2", "k"}``), per-file
+    Bloom bitmaps."""
+    entries = _compute_file_stats(spark, files, cols)
+    if bloom:
+        for base, col_blooms in _compute_file_blooms(
+            spark, files, bloom["cols"], bloom["bits_log2"], bloom["k"]
+        ).items():
+            entries.setdefault(base, {"n_rows": 0, "cols": {}})[
+                "bloom"
+            ] = col_blooms
+    return entries
+
+
 def _write_file_stats(
     spark: SparkSession,
     data_dir: str,
@@ -881,73 +946,41 @@ def _write_file_stats(
     POSITIONS (bounded by m = 2^bloom_bits_log2 per file regardless
     of row count — the positions set saturates, never grows with
     data), packed driver-side into base64 bitmaps."""
-    import json
-
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"__mn_{c}"),
-            F.max(c).alias(f"__mx_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__nu_{c}"),
-        ]
-    rows = (
-        spark.read.parquet(data_dir)
-        .groupBy(F.input_file_name().alias("__file"))
-        .agg(*aggs)
-        .collect()
+    bloom = (
+        {"cols": list(bloom_cols), "bits_log2": bloom_bits_log2, "k": bloom_k}
+        if bloom_cols
+        else None
     )
-    files = {}
-    for r in rows:
-        base = os.path.basename(r["__file"].split("?", 1)[0])
-        files[base] = {
-            "n_rows": r["__n"],
-            "cols": {
-                c: {
-                    "min": _norm_stat(r[f"__mn_{c}"]),
-                    "max": _norm_stat(r[f"__mx_{c}"]),
-                    "nulls": r[f"__nu_{c}"],
-                }
-                for c in cols
-            },
-        }
-    manifest = {"cols": cols, "files": files}
+    files = [os.path.join(data_dir, n) for n in _data_files(data_dir)]
+    _write_manifest(
+        data_dir, cols, _file_entries(spark, files, cols, bloom), bloom
+    )
 
-    bloom_cols = list(bloom_cols or [])
-    if bloom_cols:
-        m = 1 << bloom_bits_log2
-        allowed = {"string", "int", "bigint", "smallint", "tinyint"}
-        staged = spark.read.parquet(data_dir)
-        dtypes = dict(staged.dtypes)
-        bad = [
-            c for c in bloom_cols if dtypes.get(c, "?") not in allowed
-        ]
-        if bad:
-            raise TypeError(
-                f"bloom_cols must be string/integer columns, got "
-                f"{[(c, dtypes.get(c)) for c in bad]} — the write/read "
-                "hashes meet on the canonical string form"
-            )
-        import glob as _glob
 
-        data_files = sorted(
-            f
-            for f in _glob.glob(os.path.join(data_dir, "*.parquet"))
-            if not os.path.basename(f).startswith(("_", "."))
-        )
-        for base, col_blooms in _compute_file_blooms(
-            spark, data_files, bloom_cols, bloom_bits_log2, bloom_k
-        ).items():
-            files.setdefault(base, {"n_rows": 0, "cols": {}})[
-                "bloom"
-            ] = col_blooms
-        manifest["bloom"] = {
-            "cols": bloom_cols,
-            "bits_log2": bloom_bits_log2,
-            "k": bloom_k,
-        }
+def _carry_manifest(
+    spark: SparkSession,
+    src_dir: str,
+    staging: str,
+    kept: "Sequence[str]",
+    new_files: list[str],
+) -> None:
+    """Carry the source version's manifest into a DML commit: entries
+    of the ``kept`` (linked) files verbatim, fresh zone maps for the
+    ``new_files``, and the bloom INDEX CONFIG with bitmaps recomputed
+    for just the new files — dropping the config silently disabled
+    bloom pruning table-wide after the first delete (round-8 fix).
+    No-op when the source version carries no manifest."""
+    manifest = _load_manifest(src_dir)
+    if manifest is None:
+        return
+    keep = set(kept)
+    files = {n: st for n, st in manifest["files"].items() if n in keep}
+    bloom = manifest.get("bloom")
+    files.update(_file_entries(spark, new_files, manifest["cols"], bloom))
+    _write_manifest(staging, manifest["cols"], files, bloom)
 
-    with open(os.path.join(data_dir, _FILE_STATS), "w") as f:
-        json.dump(manifest, f)
+
+_BLOOM_TYPES = {"string", "int", "bigint", "smallint", "tinyint"}
 
 
 def _compute_file_blooms(
@@ -957,17 +990,26 @@ def _compute_file_blooms(
     bits_log2: int,
     k: int,
 ) -> dict:
-    """Per-file bloom bitmaps for an explicit file list — the
-    rewritten subset of a copy-on-write commit (same role as
-    :func:`_compute_file_stats`). Returns
-    ``{basename: {col: b64_bitmap}}``; per-file state is bounded by
-    m set-bit positions, never row count."""
+    """Per-file bloom bitmaps for an explicit file list (every file of
+    a fresh snapshot, or the rewritten subset of a DML commit).
+    Returns ``{basename: {col: b64_bitmap}}``; per-file state is
+    bounded by m set-bit positions, never row count. Bloom columns
+    must be string/integer (the write/read hashes meet on the
+    canonical string form)."""
     import base64
 
     if not files or not bloom_cols:
         return {}
     m = 1 << bits_log2
     staged = spark.read.parquet(*files)
+    dtypes = dict(staged.dtypes)
+    bad = [c for c in bloom_cols if dtypes.get(c, "?") not in _BLOOM_TYPES]
+    if bad:
+        raise TypeError(
+            f"bloom_cols must be string/integer columns, got "
+            f"{[(c, dtypes.get(c)) for c in bad]} — the write/read "
+            "hashes meet on the canonical string form"
+        )
     out: dict = {}
     for c in bloom_cols:
         pos_rows = (
@@ -994,9 +1036,9 @@ def _compute_file_blooms(
 def _compute_file_stats(
     spark: SparkSession, files: list[str], cols: list[str]
 ) -> dict:
-    """Per-file stats entries for an explicit file list (the
-    rewritten subset of a copy-on-write commit) — same shape as the
-    manifest's ``files`` map."""
+    """Per-file stats entries (row count plus min/max/null-count of
+    ``cols``) for an explicit file list — the manifest's ``files``
+    map shape."""
     if not files:
         return {}
     aggs = [F.count(F.lit(1)).alias("__n")]
@@ -1078,28 +1120,11 @@ def pruned_files(
     absent is skipped; bloom false-positives only cost I/O, and
     files without a bloom (pre-index versions, DML rewrites) are
     kept conservatively."""
-    import json
-
-    if backend is not None:
-        v = backend.current_version(path) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        snap_dir = backend.data_dir(path, v)
-    else:
-        v = current_snapshot(path) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        snap_dir = os.path.join(path, _SNAP_FMT.format(v))
-    data = sorted(
-        n
-        for n in os.listdir(snap_dir)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    )
-    stats_path = os.path.join(snap_dir, _FILE_STATS)
-    if not os.path.exists(stats_path):
+    _v, snap_dir = _snapshot_dir(path, version, resolve_backend(backend))
+    data = _data_files(snap_dir)
+    manifest = _load_manifest(snap_dir)
+    if manifest is None:
         return [os.path.join(snap_dir, n) for n in data], len(data)
-    with open(stats_path) as f:
-        manifest = json.load(f)
     preds = [
         (c, op, _norm_stat(val) if op != "in"
          else [_norm_stat(x) for x in val])
@@ -1226,14 +1251,10 @@ def read_snapshot_as_of(
     that didn't exist yet."""
     import datetime
 
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
+    be = resolve_backend(backend)
     if as_of.tzinfo is None:
         as_of = as_of.replace(tzinfo=datetime.timezone.utc)
-    cur = be.current_version(path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
+    cur = _head(path, be)
     best = None
     for v in be.versions(path):
         if v > cur:
@@ -1285,42 +1306,28 @@ def write_snapshot_audited(
     per-rule frame. Raises ``ExpectationError`` (with the staging
     path appended) when any rule fails.
     """
-    import uuid
-
     from ..operators.expectations import ExpectationError, check_expectations
-    from .commitstore import DEFAULT_BACKEND
 
-    be = backend if backend is not None else DEFAULT_BACKEND
-    os.makedirs(path, exist_ok=True)
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("error").parquet(staging)
-
+    be = resolve_backend(backend)
     spark = df.sparkSession
-    staged = spark.read.parquet(staging)
-    verdicts = check_expectations(staged, rules)
-    failed = [
-        (r["rule"], r["n_violations"])
-        for r in verdicts.collect()
-        if not r["passed"]
-    ]
+    with _staging(path) as staging:
+        _append_files(df, staging)
+        verdicts = check_expectations(spark.read.parquet(staging), rules)
+        failed = [
+            (r["rule"], r["n_violations"])
+            for r in verdicts.collect()
+            if not r["passed"]
+        ]
+        if not failed:
+            _finish_staging(
+                spark, staging, stats_cols, bloom_cols, commit_meta
+            )
     if failed:
         raise ExpectationError(
             "write_snapshot_audited: refusing to publish — "
             + ", ".join(f"{n} ({v} violations)" for n, v in failed)
             + f"; staged data kept at {staging}"
         )
-    if stats_cols or bloom_cols:
-        _write_file_stats(
-            spark,
-            staging,
-            list(stats_cols or []),
-            bloom_cols=list(bloom_cols or []),
-        )
-    if commit_meta is not None:
-        import json
-
-        with open(os.path.join(staging, _COMMIT_META), "w") as f:
-            json.dump(commit_meta, f)
     return _commit_staging(path, staging, be, max_retries), verdicts
 
 
@@ -1355,13 +1362,9 @@ def follow_snapshot_changes(
     mode; a positive value keeps polling until the table goes quiet
     that long; ``None`` polls forever (pair with ``max_batches``).
     """
-    import json
     import time
-    import uuid
 
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
+    be = resolve_backend(backend)
 
     def _offset() -> int | None:
         try:
@@ -1416,14 +1419,15 @@ def follow_snapshot_changes(
 # ---- fine-grained DML: copy-on-write DELETE/UPDATE/OPTIMIZE ------------
 
 
-def _link_into(src_file: str, dst_dir: str) -> None:
-    import shutil
-
-    dst = os.path.join(dst_dir, os.path.basename(src_file))
-    try:
-        os.link(src_file, dst)  # hardlink: zero-copy file reuse
-    except OSError:
-        shutil.copy2(src_file, dst)
+def _link_files(src_dir: str, names: "Sequence[str]", dst_dir: str) -> None:
+    """Hardlink (zero-copy file reuse; copy where links fail) each of
+    ``names`` from ``src_dir`` into ``dst_dir``."""
+    for n in names:
+        src, dst = os.path.join(src_dir, n), os.path.join(dst_dir, n)
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copy2(src, dst)
 
 
 def _rewrite_where(
@@ -1445,96 +1449,31 @@ def _rewrite_where(
     files. Stats for linked files carry over; stats for rewritten
     files are recomputed from just those files.
     """
-    import json
-    import shutil
-    import uuid
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    v = be.current_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    snap_dir = be.data_dir(path, v)
+    be = resolve_backend(backend)
+    v, snap_dir = _snapshot_dir(path, None, be)
     # merge-on-read deletion vectors on the current version: touched
     # files apply them before the rewrite (a DV-deleted row must not
     # resurrect); untouched files carry their vectors forward
     dvs = _load_dvs(snap_dir)
     touched, _total = pruned_files(path, predicates, version=v, backend=be)
     touched_base = {os.path.basename(p) for p in touched}
-    all_data = sorted(
-        n
-        for n in os.listdir(snap_dir)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    )
-    untouched = [n for n in all_data if n not in touched_base]
+    untouched = [n for n in _data_files(snap_dir) if n not in touched_base]
 
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    os.makedirs(staging)
-    try:
-        for n in untouched:
-            _link_into(os.path.join(snap_dir, n), staging)
+    rows_changed = 0
+    with _staging(path) as staging:
+        _link_files(snap_dir, untouched, staging)
         carried_dvs = {n: dvs[n] for n in untouched if n in dvs}
         if carried_dvs:
             _write_dvs(staging, carried_dvs)
-
         new_files: list[str] = []
-        rows_changed = 0
         if touched:
             df = _read_files_with_dvs(spark, touched, dvs)
             residual = _residual_filter(predicates)
             rows_changed = df.filter(residual).count()
-            out = transform(df, residual)
-            tmp = os.path.join(staging, ".rewrite")
-            out.write.mode("error").parquet(tmp)
-            for n in os.listdir(tmp):
-                if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                    os.rename(
-                        os.path.join(tmp, n), os.path.join(staging, n)
-                    )
-                    new_files.append(os.path.join(staging, n))
-            shutil.rmtree(tmp, ignore_errors=True)
-
-        stats_path = os.path.join(snap_dir, _FILE_STATS)
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                manifest = json.load(f)
-            kept = {
-                n: st
-                for n, st in manifest["files"].items()
-                if n in set(untouched)
-            }
-            kept.update(
-                _compute_file_stats(spark, new_files, manifest["cols"])
-            )
-            new_manifest = {"cols": manifest["cols"], "files": kept}
-            bloom_cfg = manifest.get("bloom")
-            if bloom_cfg:
-                # The bloom INDEX CONFIG must survive DML — dropping
-                # it here silently disabled bloom pruning table-wide
-                # after the first delete (round-8 fix). Rewritten
-                # files get their bitmaps recomputed from just those
-                # files, same as their zone maps.
-                new_manifest["bloom"] = bloom_cfg
-                for fname, col_blooms in _compute_file_blooms(
-                    spark,
-                    new_files,
-                    bloom_cfg["cols"],
-                    bloom_cfg["bits_log2"],
-                    bloom_cfg["k"],
-                ).items():
-                    kept.setdefault(fname, {"n_rows": 0, "cols": {}})[
-                        "bloom"
-                    ] = col_blooms
-            with open(os.path.join(staging, _FILE_STATS), "w") as f:
-                json.dump(new_manifest, f)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-
-    new_v = _commit_staging(path, staging, be, max_retries)
+            new_files = _append_files(transform(df, residual), staging)
+        _carry_manifest(spark, snap_dir, staging, untouched, new_files)
     return {
-        "version": new_v,
+        "version": _commit_staging(path, staging, be, max_retries),
         "files_rewritten": len(touched),
         "files_linked": len(untouched),
         "rows_matched": rows_changed,
@@ -1588,32 +1527,20 @@ def snapshot_health(
     — table-level OR single worst file (a fully-deleted small file
     makes its whole anti-join waste even when the table fraction is
     tiny). Metadata-only: no Spark job, O(files) local reads."""
-    import glob as _glob
-    import json
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    v = be.current_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    d = be.data_dir(path, v)
+    v, d = _snapshot_dir(path, version, resolve_backend(backend))
     dvs = _load_dvs(d)
-    per_file: dict[str, int] = {}
-    stats = os.path.join(d, _FILE_STATS)
-    if os.path.exists(stats):
-        with open(stats) as f:
-            manifest = json.load(f)
+    manifest = _load_manifest(d)
+    if manifest is not None:
         per_file = {
             f: int(e["n_rows"]) for f, e in manifest["files"].items()
         }
     else:
         import pyarrow.parquet as pq
 
-        for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
-            per_file[os.path.basename(f)] = pq.ParquetFile(
-                f
-            ).metadata.num_rows
+        per_file = {
+            n: pq.ParquetFile(os.path.join(d, n)).metadata.num_rows
+            for n in _data_files(d)
+        }
     total = sum(per_file.values())
     deleted = sum(len(ps) for ps in dvs.values())
     frac = (deleted / total) if total else 0.0
@@ -1641,31 +1568,99 @@ def snapshot_health(
     }
 
 
-def _auto_optimize_report(
+def _mor_match(
     spark: SparkSession,
     path: str,
-    be,
-    report: dict,
+    predicates: "Sequence[tuple]",
+    be: CommitBackend,
+    max_mor_rows: int,
+    op: str,
+) -> tuple[str, DataFrame | None, list[tuple[str, int]], dict]:
+    """Find a merge-on-read DML's targets in the committed head:
+    ``(head dir, matched rows with their _POS_COLS or None, fresh
+    (file, row_index) positions not already deleted, the head's
+    deletion vectors plus the fresh positions)``. Only files the
+    zone maps keep are scanned, and a distributed count guards the
+    bulk regime BEFORE any position reaches the driver."""
+    v, snap_dir = _snapshot_dir(path, None, be)
+    prior = {k: set(ps) for k, ps in _load_dvs(snap_dir).items()}
+    dvs = {k: set(ps) for k, ps in prior.items()}
+    touched, _total = pruned_files(path, predicates, version=v, backend=be)
+    if not touched:
+        return snap_dir, None, [], dvs
+    raw = _with_positions(spark.read.parquet(*touched)).filter(
+        _residual_filter(predicates)
+    )
+    _guard_mor_rows(raw.count(), max_mor_rows, op)
+    hits = raw.select(*_POS_COLS).collect()  # O(matching rows): guarded
+    fresh = [
+        (f, int(ri)) for f, ri in hits if int(ri) not in prior.get(f, ())
+    ]
+    for f, ri in fresh:
+        dvs.setdefault(f, set()).add(ri)
+    return snap_dir, raw, fresh, dvs
+
+
+def _mor_commit(
+    spark: SparkSession,
+    path: str,
+    be: CommitBackend,
+    snap_dir: str,
+    dvs: dict,
+    images: DataFrame | None,
+    max_retries: int,
+) -> int:
+    """Commit a merge-on-read version: every data file of ``snap_dir``
+    hardlinked verbatim, the deletion vectors ``dvs``, the appended
+    ``images`` (new row images of an update) and the carried
+    manifest."""
+    linked = _data_files(snap_dir)
+    with _staging(path) as staging:
+        _link_files(snap_dir, linked, staging)
+        new_files = (
+            _append_files(images, staging) if images is not None else []
+        )
+        if dvs:
+            _write_dvs(staging, {k: sorted(ps) for k, ps in dvs.items()})
+        _carry_manifest(spark, snap_dir, staging, linked, new_files)
+    return _commit_staging(path, staging, be, max_retries)
+
+
+def _mor_report(
+    spark: SparkSession,
+    path: str,
+    be: CommitBackend,
+    version: int,
+    counts: dict,
+    auto_optimize: bool,
     max_retries: int,
 ) -> dict:
-    """Close the DV-compaction loop (round 10, judge r9 #2): when a
-    MOR DML report flips ``needs_compaction``, run
+    """The MOR DML report: the committed ``version``, the call's
+    ``counts`` and :func:`snapshot_health`'s compaction verdict.
+
+    ``auto_optimize`` closes the DV-compaction loop (round 10, judge
+    r9 #2): when the verdict says ``needs_compaction``, run
     :func:`optimize_snapshot` immediately — same commit protocol, so
     the compaction is just the NEXT version (readers only ever see
     committed states, and streaming cursors fold forward through it
-    like any other commit).  The report is rewritten to the
+    like any other commit). The report is rewritten to the
     post-OPTIMIZE state with the pre-compaction numbers kept under
     ``pre_optimize_*`` so the trigger stays auditable.
 
-    The DML version is ALREADY COMMITTED when this runs, so an
+    The DML version is ALREADY COMMITTED when OPTIMIZE runs, so an
     OPTIMIZE failure must not masquerade as a failed delete/update:
     the report comes back with the successful DML state plus
     ``auto_optimize_error`` instead of raising."""
-    # the caller's report already holds the DML version's health
-    # verdict — re-reading snapshot_health here would be a redundant
-    # O(files) metadata scan per trigger
-    pre_version = report["version"]
-    pre_dv = report["dv_fraction"]
+    health = snapshot_health(path, version=version, backend=be)
+    report = {
+        "version": version,
+        **counts,
+        "dv_fraction": health["dv_fraction"],
+        "needs_compaction": health["needs_compaction"],
+        "auto_optimized": False,
+    }
+    if not (auto_optimize and health["needs_compaction"]):
+        return report
     try:
         opt_v = optimize_snapshot(
             spark, path, backend=be, max_retries=max_retries
@@ -1680,8 +1675,8 @@ def _auto_optimize_report(
             "dv_fraction": after["dv_fraction"],
             "needs_compaction": after["needs_compaction"],
             "auto_optimized": True,
-            "pre_optimize_version": pre_version,
-            "pre_optimize_dv_fraction": pre_dv,
+            "pre_optimize_version": version,
+            "pre_optimize_dv_fraction": health["dv_fraction"],
         }
     )
     return report
@@ -1732,83 +1727,18 @@ def delete_where_mor(
     debt past the threshold for more than the one commit that
     crossed it (the report then carries ``auto_optimized=True`` and
     the ``pre_optimize_*`` trigger numbers)."""
-    import shutil
-    import uuid
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    v = be.current_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    snap_dir = be.data_dir(path, v)
-    prior = {k: set(ps) for k, ps in _load_dvs(snap_dir).items()}
-    touched, _total = pruned_files(path, predicates, version=v, backend=be)
-    residual = _residual_filter(predicates)
-    new_dvs = {k: set(ps) for k, ps in prior.items()}
-    n_new = 0
-    files_affected = 0
-    if touched:
-        # positions of matching rows — metadata columns resolve only
-        # on the raw scan, so capture them FIRST, filter, and drop
-        # already-deleted positions driver-side (the prior sets are
-        # in hand anyway)
-        matcher = (
-            spark.read.parquet(*touched)
-            .withColumn(
-                "__f",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ),
-            )
-            .withColumn("__ri", F.col("_metadata.row_index"))
-            .filter(residual)
-            .select("__f", "__ri")
-        )
-        # typed bulk guard BEFORE any position reaches the driver
-        _guard_mor_rows(matcher.count(), max_mor_rows, "delete_where_mor")
-        hits = matcher.collect()  # O(matching rows): enforced above
-        for r in hits:
-            f, ri = r["__f"], int(r["__ri"])
-            if ri in prior.get(f, ()):  # already deleted: no recount
-                continue
-            new_dvs.setdefault(f, set()).add(ri)
-            n_new += 1
-        files_affected = len(
-            {
-                r["__f"]
-                for r in hits
-                if int(r["__ri"]) not in prior.get(r["__f"], ())
-            }
-        )
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    os.makedirs(staging)
-    try:
-        for n in sorted(os.listdir(snap_dir)):
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                _link_into(os.path.join(snap_dir, n), staging)
-        stats_path = os.path.join(snap_dir, _FILE_STATS)
-        if os.path.exists(stats_path):
-            shutil.copy2(stats_path, os.path.join(staging, _FILE_STATS))
-        if new_dvs:
-            _write_dvs(staging, {k: sorted(ps) for k, ps in new_dvs.items()})
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    new_v = _commit_staging(path, staging, be, max_retries)
-    health = snapshot_health(path, version=new_v, backend=be)
-    report = {
-        "version": new_v,
-        "files_affected": files_affected,
-        "rows_deleted": n_new,
-        "dv_fraction": health["dv_fraction"],
-        "needs_compaction": health["needs_compaction"],
-        "auto_optimized": False,
+    be = resolve_backend(backend)
+    snap_dir, _raw, fresh, dvs = _mor_match(
+        spark, path, predicates, be, max_mor_rows, "delete_where_mor"
+    )
+    new_v = _mor_commit(spark, path, be, snap_dir, dvs, None, max_retries)
+    counts = {
+        "files_affected": len({f for f, _ri in fresh}),
+        "rows_deleted": len(fresh),
     }
-    if auto_optimize and health["needs_compaction"]:
-        report = _auto_optimize_report(spark, path, be, report, max_retries)
-    return report
+    return _mor_report(
+        spark, path, be, new_v, counts, auto_optimize, max_retries
+    )
 
 
 def delete_where(
@@ -1865,119 +1795,31 @@ def update_where_mor(
     (:data:`DV_COMPACT_THRESHOLD`); ``auto_optimize=True`` acts on
     a flipped verdict in the same call (see
     :func:`delete_where_mor`)."""
-    import json
-    import shutil
-    import uuid
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    v = be.current_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    snap_dir = be.data_dir(path, v)
-    prior = {k: set(ps) for k, ps in _load_dvs(snap_dir).items()}
-    touched, _total = pruned_files(path, predicates, version=v, backend=be)
-    residual = _residual_filter(predicates)
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    os.makedirs(staging)
-    try:
-        for n in sorted(os.listdir(snap_dir)):
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                _link_into(os.path.join(snap_dir, n), staging)
-
-        new_dvs = {k: set(ps) for k, ps in prior.items()}
-        n_upd = 0
-        new_files: list[str] = []
-        if touched:
-            raw = (
-                spark.read.parquet(*touched)
-                .withColumn(
-                    "__f",
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ),
-                )
-                .withColumn("__ri", F.col("_metadata.row_index"))
-                .filter(residual)
+    be = resolve_backend(backend)
+    snap_dir, raw, fresh, dvs = _mor_match(
+        spark, path, predicates, be, max_mor_rows, "update_where_mor"
+    )
+    updated = None
+    if fresh:
+        # new images of the NOT-already-deleted matches only
+        pos_df = spark.createDataFrame(fresh, _POS_SCHEMA)
+        updated = raw.join(
+            F.broadcast(pos_df), on=list(_POS_COLS), how="left_semi"
+        ).drop(*_POS_COLS)
+        for c, expr in assign.items():
+            updated = updated.withColumn(
+                c, expr.cast(updated.schema[c].dataType)
             )
-            # typed bulk guard BEFORE any position reaches the driver
-            _guard_mor_rows(raw.count(), max_mor_rows, "update_where_mor")
-            hits = raw.select("__f", "__ri").collect()
-            fresh = [
-                (r["__f"], int(r["__ri"]))
-                for r in hits
-                if int(r["__ri"]) not in prior.get(r["__f"], ())
-            ]
-            n_upd = len(fresh)
-            for f, ri in fresh:
-                new_dvs.setdefault(f, set()).add(ri)
-            if fresh:
-                # new images of the NOT-already-deleted matches only
-                pos_df = spark.createDataFrame(
-                    fresh, "__f string, __ri long"
-                )
-                updated = raw.join(
-                    F.broadcast(pos_df), on=["__f", "__ri"], how="left_semi"
-                ).drop("__f", "__ri")
-                for c, expr in assign.items():
-                    updated = updated.withColumn(
-                        c, expr.cast(updated.schema[c].dataType)
-                    )
-                tmp = os.path.join(staging, ".mor_update")
-                updated.write.mode("error").parquet(tmp)
-                for n in os.listdir(tmp):
-                    if n.endswith(".parquet") and not n.startswith(
-                        ("_", ".")
-                    ):
-                        os.rename(
-                            os.path.join(tmp, n), os.path.join(staging, n)
-                        )
-                        new_files.append(os.path.join(staging, n))
-                shutil.rmtree(tmp, ignore_errors=True)
-
-        if new_dvs:
-            _write_dvs(staging, {k: sorted(ps) for k, ps in new_dvs.items()})
-        stats_path = os.path.join(snap_dir, _FILE_STATS)
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                manifest = json.load(f)
-            files_map = dict(manifest["files"])
-            files_map.update(
-                _compute_file_stats(spark, new_files, manifest["cols"])
-            )
-            new_manifest = {"cols": manifest["cols"], "files": files_map}
-            bloom_cfg = manifest.get("bloom")
-            if bloom_cfg:
-                new_manifest["bloom"] = bloom_cfg
-                for fname, col_blooms in _compute_file_blooms(
-                    spark,
-                    new_files,
-                    bloom_cfg["cols"],
-                    bloom_cfg["bits_log2"],
-                    bloom_cfg["k"],
-                ).items():
-                    files_map.setdefault(fname, {"n_rows": 0, "cols": {}})[
-                        "bloom"
-                    ] = col_blooms
-            with open(os.path.join(staging, _FILE_STATS), "w") as f:
-                json.dump(new_manifest, f)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    new_v = _commit_staging(path, staging, be, max_retries)
-    health = snapshot_health(path, version=new_v, backend=be)
-    report = {
-        "version": new_v,
-        "rows_updated": n_upd,
-        "dv_fraction": health["dv_fraction"],
-        "needs_compaction": health["needs_compaction"],
-        "auto_optimized": False,
-    }
-    if auto_optimize and health["needs_compaction"]:
-        report = _auto_optimize_report(spark, path, be, report, max_retries)
-    return report
+    new_v = _mor_commit(spark, path, be, snap_dir, dvs, updated, max_retries)
+    return _mor_report(
+        spark,
+        path,
+        be,
+        new_v,
+        {"rows_updated": len(fresh)},
+        auto_optimize,
+        max_retries,
+    )
 
 
 def update_where(
@@ -2031,24 +1873,16 @@ def optimize_snapshot(
     are recomputed (``stats_cols`` defaults to the previous
     manifest's columns) so zone-map pruning gets the tightened
     ranges the rewrite just bought."""
-    import json
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    v = be.current_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    df = read_snapshot(spark, path, version=v, backend=be)
+    be = resolve_backend(backend)
+    _v, d = _snapshot_dir(path, None, be)
+    df = _read_snapshot_dir(spark, d)
     if zorder_cols:
         df = zorder_by(df, tuple(zorder_cols), partitions=partitions)
     elif partitions:
         df = df.coalesce(partitions)
     bloom_cols = None
-    stats_path = os.path.join(be.data_dir(path, v), _FILE_STATS)
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            prev = json.load(f)
+    prev = _load_manifest(d)
+    if prev is not None:
         if stats_cols is None:
             stats_cols = prev["cols"]
         # bloom indexes survive OPTIMIZE: same columns, same config
@@ -2088,33 +1922,17 @@ def restore_snapshot(
     refcount, tested in test_layout_maintenance's vacuum-hardlink
     case). Returns the new version number.
     """
-    import json
-    import shutil
-    import uuid
-
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
-    src_dir = be.data_dir(path, version)
-    if not os.path.isdir(src_dir):
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (vacuumed or "
-            f"never committed); available: {be.versions(path)}"
-        )
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    os.makedirs(staging)
-    try:
-        for name in os.listdir(src_dir):
-            if name == _COMMIT_META:
-                continue  # the restore commit gets its own meta
-            src = os.path.join(src_dir, name)
-            if os.path.isfile(src):
-                _link_into(src, staging)
-        with open(os.path.join(staging, _COMMIT_META), "w") as f:
-            json.dump({"restored_from": version}, f)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    be = resolve_backend(backend)
+    _v, src_dir = _snapshot_dir(path, version, be)
+    names = [
+        n
+        for n in os.listdir(src_dir)
+        if n != _COMMIT_META  # the restore commit gets its own meta
+        and os.path.isfile(os.path.join(src_dir, n))
+    ]
+    with _staging(path) as staging:
+        _link_files(src_dir, names, staging)
+        _write_commit_meta(staging, {"restored_from": version})
     return _commit_staging(path, staging, be, max_retries)
 
 
@@ -2136,20 +1954,15 @@ def snapshot_changes(
     this snapshot layout. One full-outer key join between the two
     snapshot reads (operators.cdc.table_changes); both sides prune
     to the consumer's columns before the join."""
-    if version_to is None:
-        v = (
-            backend.current_version(path)
-            if backend is not None
-            else current_snapshot(path)
-        )
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        version_to = v
     from ..operators.cdc import table_changes
 
+    be = resolve_backend(backend)
+    if version_to is None:
+        version_to = _head(path, be)
+
     return table_changes(
-        read_snapshot(spark, path, version_from, backend=backend),
-        read_snapshot(spark, path, version_to, backend=backend),
+        read_snapshot(spark, path, version_from, backend=be),
+        read_snapshot(spark, path, version_to, backend=be),
         keys,
         schema_evolution=schema_evolution,
     )
@@ -2217,12 +2030,9 @@ def vacuum_snapshots(
     version to half-deleted data) and orphan staging dirs are the
     ones no surviving manifest references. Returns removed
     versions."""
-    import shutil
     import time
 
-    from .commitstore import DEFAULT_BACKEND
-
-    be = backend if backend is not None else DEFAULT_BACKEND
+    be = resolve_backend(backend)
     cur = be.current_version(path)
     versions = be.versions(path)
     committed = [v for v in versions if cur is None or v <= cur]
@@ -2253,7 +2063,7 @@ def vacuum_snapshots(
         except (OSError, FileNotFoundError):
             continue
     for n in os.listdir(path) if os.path.isdir(path) else []:
-        if n.startswith(".staging-") and n not in referenced:
+        if n.startswith(_STAGING) and n not in referenced:
             full = os.path.join(path, n)
             try:
                 if time.time() - os.stat(full).st_mtime <= orphan_grace_seconds:
@@ -2305,8 +2115,6 @@ def apply_retention(
     every file that mixes ages). String ordering must match the
     value's semantic order — zero-padded dates/ints do, which is the
     standard hive-partition convention. Returns dropped values."""
-    import shutil
-
     dropped = []
     prefix = f"{partition_col}="
     for name in sorted(os.listdir(path)):
@@ -2331,8 +2139,6 @@ def erase_partition_keys(
     path costs a rewrite of touched partitions only, never the
     table, but needs the affected-partition list (from the key→
     partition index or a scan)."""
-    import shutil
-
     erased = []
     for v in values:
         d = os.path.join(path, f"{partition_col}={v}")

@@ -964,7 +964,7 @@ def versioned_snapshot_sink(
                 # (the replay guard would skip the batch on restart
                 # and the stream would crash-loop on every trigger
                 # while the failure persists — same isolation policy
-                # as the DML path's _auto_optimize_report)
+                # as the DML path's _mor_report)
                 try:
                     optimize_snapshot(spark, path, backend=backend)
                 except Exception as e:  # noqa: BLE001

@@ -54,11 +54,9 @@ def main() -> int:
         # with '…' by explain, so parsing the whole bracket (the old
         # form) could under/mis-count (r12 advice).
         scans: Counter = Counter()
-        n_scan_headers = 0
         for block in re.split(r"\n\(\d+\) ", plan):
             if not block.startswith("Scan parquet"):
                 continue
-            n_scan_headers += 1
             m = re.search(r"Location: \S+ \[([^,\]…]+)", block)
             table = (
                 re.sub(r"\.parquet.*$", "", m.group(1).split("/")[-1])

@@ -396,3 +396,87 @@ def test_vacuum_grace_protects_inflight_catalog_txn(spark, tmp_path):
             spark, cat.table_path("t"), tv, backend=cat.be
         ).collect()
     } == {100, 101, 102}
+
+
+@pytest.mark.parametrize("kind", ["file", "conditional_put"])
+def test_snapshot_table_paths_through_each_backend(spark, tmp_path, kind):
+    """Every snapshot-table path resolves versions through the commit
+    backend alone: a stats+bloom write, a pruned point read, COW
+    delete and update, a MOR delete and the change feed give the same
+    rows under the rename backend and the object-store backend."""
+    from pyspark.sql import functions as F
+
+    from enclaveid_data_pipeline_spark.sources.layout import (
+        delete_where,
+        delete_where_mor,
+        pruned_files,
+        read_snapshot,
+        read_snapshot_pruned,
+        snapshot_changes,
+        update_where,
+        write_snapshot,
+    )
+
+    be = (
+        FileCommitBackend()
+        if kind == "file"
+        else ConditionalPutCommitBackend(
+            FileConditionalStore(str(tmp_path / "store"))
+        )
+    )
+    path = str(tmp_path / "tbl")
+
+    def rows(df):
+        return sorted((r.k, r.grp, r.v) for r in df.collect())
+
+    base = (
+        spark.range(0, 200)
+        .select(
+            F.col("id").cast("int").alias("k"),
+            F.concat(F.lit("g"), (F.col("id") % 10).cast("string")).alias(
+                "grp"
+            ),
+            F.col("id").cast("int").alias("v"),
+        )
+        .repartitionByRange(4, "k")
+        .sortWithinPartitions("k")
+    )
+    v1 = write_snapshot(
+        base, path, backend=be, stats_cols=["k"], bloom_cols=["grp"]
+    )
+    assert v1 == 1 and be.current_version(path) == 1
+
+    # pruned point read: one of the four range-clustered files survives
+    files, total = pruned_files(path, [("k", "==", 17)], backend=be)
+    assert total == 4 and len(files) == 1
+    point = read_snapshot_pruned(spark, path, [("k", "==", 17)], backend=be)
+    assert rows(point) == [(17, "g7", 17)]
+
+    rep = delete_where(spark, path, [("k", "<", 10)], backend=be)
+    assert rep["version"] == 2 and rep["files_rewritten"] == 1
+    assert rep["rows_matched"] == 10
+    assert rows(read_snapshot(spark, path, backend=be)) == [
+        (k, f"g{k % 10}", k) for k in range(10, 200)
+    ]
+
+    rep = update_where(
+        spark, path, [("k", "==", 50)], {"v": F.lit(-1)}, backend=be
+    )
+    assert rep["version"] == 3 and rep["files_rewritten"] == 1
+    # the carried manifest still prunes the rewritten version
+    files, _total = pruned_files(path, [("k", "==", 50)], backend=be)
+    assert len(files) == 1
+    point = read_snapshot_pruned(spark, path, [("k", "==", 50)], backend=be)
+    assert rows(point) == [(50, "g0", -1)]
+
+    rep = delete_where_mor(spark, path, [("k", "==", 199)], backend=be)
+    assert rep["version"] == 4 and rep["rows_deleted"] == 1
+    assert read_snapshot(spark, path, backend=be).count() == 189
+
+    feed = snapshot_changes(spark, path, 1, keys=["k"], backend=be)
+    got = sorted((r.k, r.v, r.change_type) for r in feed.collect())
+    assert got == sorted(
+        [(k, k, "delete") for k in range(10)]
+        + [(50, 50, "update_pre"), (50, -1, "update_post")]
+        + [(199, 199, "delete")]
+    )
